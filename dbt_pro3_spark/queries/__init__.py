@@ -212,13 +212,15 @@ _CORE_MODULES_LAST_KEY = "audit_rowcount_log"
 
 # Re-sample targets: keys whose defect was fixed (or whose oracle was
 # upgraded) in the current round and must land a driver-green CORRECTNESS
-# row before anything else. Round 9: CORRECTNESS_r08 was 50/50 hash-green,
-# so there are no defect or upgrade re-samples — the whole window goes to
-# the never-sampled tail (167 keys remaining after the r08 fold-in).
+# row before anything else. After the r11 fold-in there are none: 22 keys
+# remain never driver-verified, and they already lead the window. Five of
+# them are the r11 misses (ext_text_encode_ids, ext_feature_hashing,
+# array_funcs_misc, ext_embed_whiten, ext_embed_quantile_norm), whose
+# array-output columns the driver's canonicalizer cannot sort.
 _R5_RESAMPLE: list[str] = []
 
 # Keys the driver's bounded CORRECTNESS window has already verified green —
-# the union of every round's CORRECTNESS_rNN key set to date (r01-r08, 347
+# the union of every round's CORRECTNESS_rNN greens to date (r01-r11, 492
 # keys), grouped below by the round that sampled them. The driver samples
 # the first ~50 keys of queries() per round, so verified keys rotate to the
 # tail and each round's window lands on never-sampled keys (enforced by
@@ -232,6 +234,24 @@ _R5_RESAMPLE: list[str] = []
 # with the rest; the ANN triad re-entered the window in round 7 when it
 # gained real oracles (_R5_RESAMPLE).
 _DRIVER_VERIFIED = {
+    # r11 window (CORRECTNESS_r11.json — 45/50 hash-green fold-in)
+    "agg_boolean_funcs", "agg_histogram_equidepth", "date_parts_misc",
+    "ext_ab_ztest", "ext_basket_pairs", "ext_dedup_chunk_fuzzy",
+    "ext_dedup_cluster_stats", "ext_dedup_containment",
+    "ext_dedup_incremental_fuzzy", "ext_dedup_prefix_filter",
+    "ext_drift_psi", "ext_dsir_resample", "ext_embed_dim_stats",
+    "ext_embed_hard_negatives", "ext_eval_confusion",
+    "ext_event_transition", "ext_interval_overlap_join",
+    "ext_label_balance", "ext_length_bucket_batch", "ext_mm_blur_detect",
+    "ext_mm_video_neardup", "ext_part_pareto", "ext_privacy_dp_noise",
+    "ext_privacy_erasure", "ext_quality_logistic", "ext_rank_fusion",
+    "ext_return_rate_wilson", "ext_source_overlap",
+    "ext_stream_windowed_topk", "ext_supplier_hhi", "ext_surrogate_key",
+    "ext_table_diff", "ext_text_dup_span_remove", "ext_text_gopher_rules",
+    "ext_text_vocab_coverage", "ext_token_budget_plan",
+    "ext_user_churn_features", "ext_user_streaks", "ext_win_ewma",
+    "ext_win_rolling_median", "ext_winsorize", "setop_except_all",
+    "setop_intersect_all", "str_funcs_misc", "win_nth_ratio",
     # r10 window (CORRECTNESS_r10.json — 50/50 hash-green fold-in)
     "agg_bitmask_or", "agg_corr_regression", "agg_grouping_id",
     "agg_grouping_sets", "agg_max_by", "agg_mode_moments",

@@ -16,13 +16,14 @@ import os
 import sys
 import textwrap
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
     from dbt_pro3_spark.queries import _DRIVER_VERIFIED
 
-    arts = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    arts = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
     if not arts:
         sys.exit("no CORRECTNESS artifacts found")
     newest = arts[-1]

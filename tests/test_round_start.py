@@ -17,10 +17,12 @@ from __future__ import annotations
 
 import glob
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
 
+ROOT = Path(__file__).resolve().parent.parent
 SF_DIRS = [d for d in glob.glob("/root/testdata/sf*") if os.path.isdir(d)]
 
 
@@ -116,13 +118,16 @@ def _correctness_greens():
     hash all True — across every driver CORRECTNESS artifact. The single
     definition of 'driver-green' shared by the forward and reverse
     fold-in guards below, so the two can never drift apart on what green
-    means."""
+    means. Resolved against this checkout, and an empty glob is an error:
+    with no artifact the forward guard would pass without checking."""
     import json
 
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        for key, r in json.load(open(path)).items():
+    paths = sorted(ROOT.glob("CORRECTNESS_r*.json"))
+    assert paths, f"no CORRECTNESS_r*.json artifact under {ROOT}"
+    for path in paths:
+        for key, r in json.loads(path.read_text()).items():
             if r.get("rows_match") and r.get("schema_match") and r.get("hash_match"):
-                yield os.path.basename(path), key
+                yield path.name, key
 
 
 def test_driver_verified_covers_every_correctness_green():
