@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import as_double
+from .similarity import as_double, double_sql
 
 
 def medoid_codebooks(
@@ -55,11 +55,10 @@ def _table_lit(book: list[list[float]]) -> Column:
     array element-by-element with F.lit costs ~2k py4j round trips per
     ext_ann_pq plan build (encode + decode together measured ~2 s of pure
     driver time per invocation — profile_key r11); one parsed literal is
-    milliseconds. repr() round-trips doubles exactly and the D suffix
-    keeps the SQL type DOUBLE, so the baked values are bit-identical to
-    the F.lit form."""
+    milliseconds. ``double_sql`` bakes each value bit-identical to the
+    F.lit form, non-finite ones included."""
     rows = ", ".join(
-        "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")" for c in book
+        "array(" + ", ".join(double_sql(x) for x in c) + ")" for c in book
     )
     return F.expr(f"array({rows})")
 

@@ -19,9 +19,20 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def double_sql(x: float) -> str:
+    """One double as a Spark SQL literal that parses back bit-identical:
+    repr() round-trips finite doubles and the D suffix keeps the type
+    DOUBLE. inf/-inf/nan have no literal form (``infD`` fails to parse),
+    so those go through a string cast."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
 def as_double(vec: Column) -> Column:

@@ -10,9 +10,13 @@ Reproduces the reference's orchestration semantics (SURVEY.md §3):
 - declared schema tests run after the DAG completes
   (bronze_schema.yml not_null/unique).
 
-Everything stays lazy until materialization; Catalyst inlines the whole
-model chain, so an unmaterialized intermediate model costs nothing — the
-Spark-idiomatic analogue of dbt CTE inlining.
+Each model costs ONE Spark action, its post-hook audit. An intermediate
+model is not free: the audit counts it, and every consumer would re-run its
+upstream chain. So the source count is the upstream model's own target
+count (taken one wave earlier), the not_null/unique tests fold into the
+audit's grouped aggregate, and an ephemeral model that another model refs is
+pinned lazily, so its audit action materializes it once for all readers.
+Leaf ephemeral models stay lazy — the analogue of dbt CTE inlining.
 """
 
 from __future__ import annotations
@@ -44,7 +48,8 @@ class Model:
     # use_materialization_v2 flag, dbt_project.yml:22):
     #   "table"       parquet write + read-back (materialize_path required)
     #   "view"        temp-view registration — recomputed per query
-    #   "ephemeral"   default: lazy DataFrame; Catalyst inlines downstream
+    #   "ephemeral"   default: lazy DataFrame; pinned (localCheckpoint)
+    #                 when another model refs it, else inlined downstream
     #   "incremental" plans/incremental.py merge/append into a versioned
     #                 store at materialize_path (unique_key/order_col config)
     #   "snapshot"    plans/snapshot.py SCD2 history at materialize_path
@@ -151,6 +156,11 @@ class ModelRegistry:
         """
         result = RunResult()
         lock = threading.Lock()
+        consumed = {d for m in self._models.values() for d in m.deps}
+        # per model: target count, and per key-test column its Row of
+        # (column, rows, not_null, unique) from the audit aggregate
+        counts: dict[str, int] = {}
+        key_stats: dict[str, dict] = {}
 
         def ref(name: str) -> DataFrame:
             with lock:
@@ -185,15 +195,26 @@ class ModelRegistry:
                 # dbt "view": named, catalog-visible, recomputed per query
                 df.createOrReplaceTempView(m.name)
                 df = spark.table(m.name)
+            elif name in consumed:
+                # read by its audit and by each consumer: the audit action
+                # below materializes the pin once for all of them
+                df = df.localCheckpoint(eager=False)
             with lock:
                 result.outputs[name] = df
             # post-hook: audit row of source/target counts (dbt_logs schema,
-            # customers_bronze.sql:6-7; bad_records hard-coded 0 as at :14)
-            src_count = (
-                result.outputs[m.deps[0]].count() if m.deps else df.count()
-            )
-            tgt_count = df.count()
+            # customers_bronze.sql:6-7; bad_records hard-coded 0 as at :14),
+            # one action: the key-test aggregate also yields the row count
+            key_cols = [t[1] for t in m.tests if t[0] in ("not_null", "unique")]
+            if key_cols:
+                stats = {r["column"]: r for r in _scalar_rows(_key_profile(df, key_cols))}
+                tgt_count = next(iter(stats.values()))["rows"]
+            else:
+                stats, tgt_count = {}, df.count()
             with lock:
+                key_stats[name] = stats
+                counts[name] = tgt_count
+                # deps ran in earlier waves, so their counts are in
+                src_count = counts[m.deps[0]] if m.deps else tgt_count
                 result.audit.append(
                     {
                         "dataset": name,
@@ -213,34 +234,60 @@ class ModelRegistry:
                     list(pool.map(build, wave))
 
         # dbt-test equivalents (SURVEY §3 entry point 2; the full quartet —
-        # the reference declares only not_null/unique)
+        # the reference declares only not_null/unique, read from the audit)
         from ..operators.quality import test_accepted_values, test_relationships
 
         for m in self._models.values():
             df = result.outputs[m.name]
             for spec in m.tests:
                 kind, column = spec[0], spec[1]
-                if kind == "not_null":
-                    bad = df.filter(F.col(column).isNull()).count()
-                elif kind == "unique":
-                    bad = (
-                        df.filter(F.col(column).isNotNull())
-                        .groupBy(column)
-                        .count()
-                        .filter(F.col("count") > 1)
-                        .count()
-                    )
+                if kind in ("not_null", "unique"):
+                    bad = key_stats[m.name][column][kind]
                 elif kind == "accepted_values":
-                    bad = test_accepted_values(df, column, list(spec[2])).collect()[0][
-                        "violations"
-                    ]
+                    bad = _scalar_rows(
+                        test_accepted_values(df, column, list(spec[2]))
+                    )[0]["violations"]
                 elif kind == "relationships":
                     parent_name, parent_key = spec[2]
-                    bad = test_relationships(
-                        df, column, result.outputs[parent_name], parent_key
-                    ).collect()[0]["violations"]
+                    bad = _scalar_rows(
+                        test_relationships(
+                            df, column, result.outputs[parent_name], parent_key
+                        )
+                    )[0]["violations"]
                 else:
                     raise ValueError(f"unknown test kind {kind!r}")
                 if bad:
                     result.test_failures.append(f"{m.name}.{column}:{kind}={bad}")
         return result
+
+
+def _key_profile(df: DataFrame, columns: list[str]) -> DataFrame:
+    """One row per distinct key column: (column, rows, not_null, unique).
+    Grouping by the column gives group sizes n; sum(n) is the row count,
+    the NULL group's n the not_null violations, and the non-NULL groups
+    with n > 1 the unique violations (dbt counts duplicated keys)."""
+    parts = [
+        df.groupBy(c)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(
+            F.lit(c).alias("column"),
+            F.coalesce(F.sum("__n"), F.lit(0)).alias("rows"),
+            F.coalesce(
+                F.sum(F.when(F.col(c).isNull(), F.col("__n"))), F.lit(0)
+            ).alias("not_null"),
+            F.count(F.when(F.col(c).isNotNull() & (F.col("__n") > 1), 1)).alias(
+                "unique"
+            ),
+        )
+        for c in dict.fromkeys(columns)
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.union(p)
+    return out
+
+
+def _scalar_rows(df: DataFrame) -> list:
+    """The runner's one driver-side materialization: audit and test
+    aggregates, one row per declared test column."""
+    return df.collect()

@@ -7987,16 +7987,20 @@ def ext_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     zz = z.withColumn(
         "obs", F.max(F.when(F.col("k") == -1, F.col("z"))).over(w_all)
     )
+    # an empty panel leaves no replicate rows: n and n_extreme coalesce to
+    # 0 as the oracle's COUNT(*) and CASE sums give (obs stays NULL)
     return (
         zz.filter(F.col("k") >= 0)
         .agg(
-            F.max("nn").alias("n"),  # panel size (identical in every group)
+            # panel size (identical in every group)
+            F.coalesce(F.max("nn"), F.lit(0).cast("bigint")).alias("n"),
             F.max("obs").alias("obs"),
-            F.sum(
-                F.when(F.abs(F.col("z")) >= F.abs(F.col("obs")), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_extreme"),
+            F.coalesce(
+                F.sum(
+                    F.when(F.abs(F.col("z")) >= F.abs(F.col("obs")), 1).otherwise(0)
+                ).cast("bigint"),
+                F.lit(0).cast("bigint"),
+            ).alias("n_extreme"),
         )
         .select(
             F.col("n").alias("n_customers"),

@@ -1790,10 +1790,8 @@ def ext_embed_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.append((r, win.vec_id, win.rel, round(win.ms, 6), round(win.score, 6)))
         if r < MMR_K:
             # one parsed literal instead of 64 per-element lit() py4j
-            # round trips per round; repr() round-trips doubles exactly
-            wv = F.expr(
-                "array(" + ", ".join(f"{float(x)!r}D" for x in win._v) + ")"
-            )
+            # round trips per round; double_sql round-trips doubles exactly
+            wv = F.expr("array(" + ", ".join(sim.double_sql(x) for x in win._v) + ")")
             wn = F.lit(float(win._norm))
             cand = (
                 cand.filter(F.col("vec_id") != win.vec_id)

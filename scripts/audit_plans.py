@@ -30,7 +30,6 @@ def main() -> None:
     from dbt_pro3_spark.queries import all_queries
     from dbt_pro3_spark.session import get_spark
 
-    sys.path.insert(0, "/root/repo")
     import bench
 
     keys = sys.argv[1:] or list(bench.HEADLINE)

@@ -10,8 +10,10 @@ import inspect
 import re
 import sys
 from collections import defaultdict
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from dbt_pro3_spark.queries import all_oracle, all_queries  # noqa: E402
 
@@ -33,7 +35,7 @@ def main() -> None:
     groups: dict[str, list[tuple[str, str, str]]] = defaultdict(list)
     for key, fn in qs.items():
         f = inspect.unwrap(fn)
-        path = inspect.getsourcefile(f).replace("/root/repo/", "")
+        path = Path(inspect.getsourcefile(f)).resolve().relative_to(ROOT)
         line = inspect.getsourcelines(f)[1]
         doc = first_words(inspect.getdoc(f) or "")
         doc = doc.replace("|", "\\|")

@@ -21,7 +21,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -47,7 +48,7 @@ def main() -> None:
     if flags:
         pinned = set(tsc._CEILINGS) | set(tsc._CEILINGS_TIER2)
         pinned |= set(getattr(tsc, "_CEILINGS_TIER3", {}))
-        bench = json.load(open("/root/repo/bench_detail.json"))["detail"]
+        bench = json.load(open(os.path.join(ROOT, "bench_detail.json")))["detail"]
         keys = sorted(k for k in bench if k not in pinned)
     if not keys:
         print("nothing to measure", file=sys.stderr)

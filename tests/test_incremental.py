@@ -4,6 +4,7 @@ same state as a full refresh over their union."""
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -13,7 +14,8 @@ from dbt_pro3_spark.sources.readers import load
 
 from .conftest import SF_DIR
 
-BASE = "/root/repo/.scratch/incremental_events"
+ROOT = Path(__file__).resolve().parent.parent
+BASE = str(ROOT / ".scratch" / "incremental_events")
 
 
 def test_merge_latest_converges_to_full_refresh(spark):
@@ -49,7 +51,7 @@ def test_merge_latest_converges_to_full_refresh(spark):
 
 
 def test_append_mode_accumulates(spark):
-    base = "/root/repo/.scratch/incremental_append"
+    base = str(ROOT / ".scratch" / "incremental_append")
     shutil.rmtree(base, ignore_errors=True)
     ev = load(spark, SF_DIR, "events").select("event_id", "ts")
     b1 = ev.filter(F.col("ts") < "2024-01-10")

@@ -16,6 +16,8 @@ far above what a broken encoder (≈ random shortlist, recall ≈ 25/499 ≈
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from dbt_pro3_spark.queries import all_queries
@@ -57,3 +59,14 @@ def test_pq_codes_are_valid_and_deterministic(spark):
     # deterministic: re-deriving yields identical codebooks
     books2 = pqm.medoid_codebooks(emb, "embedding", m=8, ks=16)
     assert books == books2
+
+
+def test_table_lit_bakes_non_finite_doubles(spark):
+    """inf/nan have no SQL literal form; the baked table must still parse
+    and read back the exact values."""
+    from dbt_pro3_spark.ext.pq import _table_lit
+
+    book = [[1.5, float("inf")], [float("nan"), -0.1]]
+    got = spark.range(1).select(_table_lit(book).alias("t")).collect()[0]["t"]
+    assert got[0] == [1.5, float("inf")]
+    assert math.isnan(got[1][0]) and got[1][1] == -0.1

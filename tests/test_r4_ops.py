@@ -1103,3 +1103,13 @@ def test_mixture_temperature_axioms(spark):
     assert smp == sorted(smp) and nat == sorted(nat)
     # smoothing: sampling shares are strictly less spread than natural
     assert (smp[-1] - smp[0]) < (nat[-1] - nat[0]) + 1e-9
+
+
+def test_permutation_test_empty_panel(spark, tmp_path):
+    """No orders at all: one row with a zero panel and zero extreme
+    replicates, as the oracle's COUNT(*) and CASE sums give."""
+    load(spark, SF_DIR, "orders").limit(0).write.parquet(str(tmp_path / "orders.parquet"))
+    rows = _Q["ext_permutation_test"](spark, str(tmp_path)).collect()
+    assert [r.asDict() for r in rows] == [
+        {"n_customers": 0, "observed_sum_cents": None, "n_extreme": 0, "p_value_est": 0.0}
+    ]

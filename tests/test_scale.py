@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import io
 import contextlib
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +19,8 @@ from dbt_pro3_spark.sources.readers import load
 
 from .conftest import SF_DIR
 
-SCRATCH = "/root/repo/.scratch/scale"
+ROOT = Path(__file__).resolve().parent.parent
+SCRATCH = str(ROOT / ".scratch" / "scale")
 
 
 def plan_str(df) -> str:
@@ -47,7 +49,7 @@ def test_bucketed_join_has_no_shuffle(spark):
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     for t in ("b_orders", "b_lineitem"):
-        shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
+        shutil.rmtree(ROOT / "spark-warehouse" / t, ignore_errors=True)
     write_bucketed(
         load(spark, SF_DIR, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice"),
         "b_orders",

@@ -135,3 +135,52 @@ def test_materialization_matrix_identical_results(spark, tmp_path):
     assert hist.count() == 4  # 3 current + 1 closed
     assert hist.filter("is_current").count() == 3
     assert hist.filter("k = 2 AND NOT is_current").count() == 1
+
+
+def test_registry_spends_one_action_per_model(spark, monkeypatch):
+    """Source counts reuse the upstream target count and not_null/unique
+    fold into the audit aggregate, so each model costs exactly one
+    count/collect — and the failures read the same as separate tests."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from dbt_pro3_spark.plans.registry import ModelRegistry
+
+    reg = ModelRegistry()
+    key_tests = (("not_null", "k"), ("unique", "k"))
+
+    @reg.model("root")
+    def root(spark, ref):
+        return spark.createDataFrame(
+            [(1, "a"), (2, "b"), (2, "c"), (None, "d"), (3, None)], "k int, v string"
+        )
+
+    @reg.model("all_keys", deps=("root",), tests=key_tests)
+    def all_keys(spark, ref):
+        return ref("root")
+
+    # a second, clean key column rides the same action
+    @reg.model("low_keys", deps=("root",), tests=key_tests + (("not_null", "v"),))
+    def low_keys(spark, ref):
+        return ref("root").filter("k IS NULL OR k < 3")
+
+    actions = []
+    for name in ("count", "collect"):
+        def counted(df, *args, _orig=getattr(DataFrame, name), **kwargs):
+            actions.append(_orig.__name__)
+            return _orig(df, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, name, counted)
+    result = reg.run(spark)
+    monkeypatch.undo()
+
+    assert result.test_failures == [
+        "all_keys.k:not_null=1", "all_keys.k:unique=1",
+        "low_keys.k:not_null=1", "low_keys.k:unique=1",
+    ]
+    audit = {a["dataset"]: a for a in result.audit}
+    assert {n: a["target_records"] for n, a in audit.items()} == {
+        "root": 5, "all_keys": 5, "low_keys": 4,
+    }
+    for name, deps in (("all_keys", "root"), ("low_keys", "root")):
+        assert audit[name]["source_records"] == audit[deps]["target_records"]
+    assert len(actions) == len(audit) == 3, actions

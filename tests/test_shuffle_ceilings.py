@@ -29,12 +29,16 @@ a pin (scripts pattern: clear all four caches, plan, count ") Exchange").
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from dbt_pro3_spark.queries import all_queries
 
 from .conftest import SF_DIR
 from .test_plan_quality import plan_str
+
+ROOT = Path(__file__).resolve().parent.parent
 
 _QUERIES = all_queries()
 
@@ -452,7 +456,7 @@ def test_every_bench_key_is_pinned():
     scripts/measure_exchange_ceilings.py before adding them."""
     import json
 
-    bench = set(json.load(open("/root/repo/bench_detail.json"))["detail"])
+    bench = set(json.loads((ROOT / "bench_detail.json").read_text())["detail"])
     unpinned = bench - set(_ALL_CEILINGS)
     stale = set(_ALL_CEILINGS) - set(_QUERIES)
     assert not unpinned, f"bench keys without an Exchange ceiling: {sorted(unpinned)}"

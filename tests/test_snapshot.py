@@ -3,12 +3,14 @@
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from dbt_pro3_spark.plans.snapshot import apply_snapshot
 
-BASE = "/root/repo/.scratch/snapshot_customers"
+ROOT = Path(__file__).resolve().parent.parent
+BASE = str(ROOT / ".scratch" / "snapshot_customers")
 
 
 def test_scd2_three_batches(spark):
