@@ -65,7 +65,7 @@ def normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Memoized base-scan FRAMES, keyed by (applicationId, sf_dir, table).
+# Memoized base-scan FRAMES, keyed by (session, sf_dir, table).
 # This caches scan-plan METADATA only (the DataFrame is an immutable
 # logical plan; reusing the object is identical to a caller reusing its
 # own variable): spark.read.parquet costs ~100 ms per call of pure
@@ -74,10 +74,14 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 # — measured ~15-20% of the whole 339-key bench before this cache.
 # Every action over the shared frame still reads and recomputes from the
 # parquet files; NO data or results are cached (guide §6 puts file-
-# listing caching in the same class). Assumptions shared with the other
+# listing caching in the same class). The key is the SparkSession object
+# itself, so a frame is only ever returned to the session it is bound to
+# (``spark.newSession()`` gets its own entry and runs under its own conf),
+# and a hit costs no py4j round trip. Assumptions shared with the other
 # session caches (graph/probe/IVF): sf_dir parquet is immutable for the
-# application's lifetime, and entries from other applications are purged
-# on first miss so a restarted session never sees stale JVM references.
+# application's lifetime, and entries from other applications (recorded
+# with each entry) are purged on first miss so a restarted session never
+# sees stale JVM references.
 _SCAN_CACHE: dict = {}
 _SCAN_LOCK = __import__("threading").Lock()
 
@@ -90,16 +94,16 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     scan-plan object is memoized per session (see _SCAN_CACHE above).
     """
     tune(spark)
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
+    key = (spark, sf_dir, name)
     with _SCAN_LOCK:
-        df = _SCAN_CACHE.get(key)
-        if df is None:
-            for k in [k for k in _SCAN_CACHE if k[0] != app]:
+        entry = _SCAN_CACHE.get(key)
+        if entry is None:
+            app = spark.sparkContext.applicationId
+            for k in [k for k, (a, _) in _SCAN_CACHE.items() if a != app]:
                 del _SCAN_CACHE[k]
-            df = normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-            _SCAN_CACHE[key] = df
-        return df
+            entry = (app, normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet")))
+            _SCAN_CACHE[key] = entry
+        return entry[1]
 
 
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:

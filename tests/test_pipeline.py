@@ -11,6 +11,8 @@ Exclusions (documented reference nondeterminism):
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 
@@ -428,23 +430,11 @@ def pipeline_run(spark):
 @pytest.fixture(scope="module")
 def duck_raw():
     import duckdb
-    import random
 
     con = duckdb.connect()
-    rng = random.Random(42)
     frames = {
-        "raw_customers": pd.DataFrame(
-            fx.gen_customers(rng, 1000), columns=[c.split()[0] for c in fx.CUSTOMER_COLS.split(", ")]
-        ),
-        "raw_policies": pd.DataFrame(
-            fx.gen_policies(rng, 3000, 1000), columns=[c.split()[0] for c in fx.POLICY_COLS.split(", ")]
-        ),
-        "raw_claims": pd.DataFrame(
-            fx.gen_claims(rng, 5000, 3000), columns=[c.split()[0] for c in fx.CLAIM_COLS.split(", ")]
-        ),
-        "raw_premiums": pd.DataFrame(
-            fx.gen_premiums(rng, 10000, 3000), columns=[c.split()[0] for c in fx.PREMIUM_COLS.split(", ")]
-        ),
+        name: pd.DataFrame(rows, columns=[c.split()[0] for c in ddl.split(", ")])
+        for name, (rows, ddl) in fx.raw_rows(seed=42).items()
     }
     for name, df in frames.items():
         con.register(name, df)
@@ -638,3 +628,50 @@ def test_pipeline_source_has_no_wall_clock_dates():
                 if not guarded.search(line):
                     offenders.append(f"{p.name}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_raw_tables_are_jvm_resident(spark):
+    """Plan guard: every raw fixture is an Arrow-built LocalRelation, never a
+    Python-RDD scan (``LogicalRDD``) that each action would re-feed through
+    Python workers. Reads the analyzed plan only; runs no Spark job."""
+    for name, df in fx.raw_tables(spark, seed=7, scale=0.05).items():
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation", (name, plan.toString())
+
+
+def test_raw_tables_empty_input_keeps_schema(spark):
+    from pyspark.sql.types import StructType
+
+    raw = fx.raw_tables(spark, scale=0)
+    for name, (rows, ddl) in fx.raw_rows(scale=0).items():
+        assert rows == []
+        assert raw[name].schema == StructType.fromDDL(ddl), name
+        assert raw[name].count() == 0, name
+
+
+@pytest.fixture
+def tokyo_tz(monkeypatch):
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_raw_timestamps_ignore_host_timezone(spark, tokyo_tz):
+    """The fixtures' naive datetimes must read back in Spark (session UTC) as
+    the same wall-clock the generator wrote, whatever the process TZ — the
+    DuckDB replication above reads them that way."""
+    from pyspark.sql import functions as F
+
+    raw = fx.raw_tables(spark, seed=7, scale=0.05)
+    for name, (rows, ddl) in fx.raw_rows(seed=7, scale=0.05).items():
+        i = [c.split()[0] for c in ddl.split(", ")].index("created_at")
+        want = sorted(r[i].strftime("%Y-%m-%d %H:%M:%S.%f") for r in rows)
+        got = sorted(
+            r[0]
+            for r in raw[name]
+            .select(F.date_format("created_at", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+            .collect()
+        )
+        assert got == want, (name, got[:3], want[:3])

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from dbt_pro3_spark.sources.readers import TESTDATA_TABLES, load, normalize_ts
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, SF_SMALL
 
 
 def test_no_ntz_or_raw_ts_survives_load(spark):
@@ -57,3 +57,18 @@ def test_timestamp_filter_pushdown_reaches_scan(spark):
     )
     plan = li._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan
+
+
+def test_scan_memo_is_keyed_by_session(spark):
+    """_SCAN_CACHE boundary: a second SparkSession in the same application
+    gets a frame bound to itself (so it runs under its own conf), and each
+    session still hits its own memo."""
+    first = load(spark, SF_SMALL, "region")
+    assert load(spark, SF_SMALL, "region") is first
+
+    other = spark.newSession()
+    df = load(other, SF_SMALL, "region")
+    assert df.sparkSession is other
+    assert df._jdf.sparkSession().equals(other._jsparkSession)
+    assert load(other, SF_SMALL, "region") is df
+    assert load(spark, SF_SMALL, "region") is first
