@@ -17,14 +17,13 @@ inference would produce; bronze's full-width CAST is still exercised.
 All single-word categorical values so DuckDB's manual INITCAP replication
 in the golden test is exact (SURVEY §7 hazard 7).
 
-Each table is handed to Spark once as a ``pyarrow.Table`` built column by
-column from the generated rows (``_arrow_frame``). Spark keeps it JVM-side:
-a ``LocalRelation`` under ``spark.sql.execution.arrow.localRelationThreshold``
-(an Arrow-backed RDD above it), so no scan sends the rows back through a
-Python worker, and the relation carries exact size statistics for the
-planner. Naive ``datetime`` values enter Arrow as UTC wall-clock, so Spark
-(session zone UTC) reads the same wall-clock the generator wrote, as the
-DuckDB replication in the golden test does, whatever the host's ``TZ``.
+Each table is handed to Spark once through ``sources.readers.local_frame``,
+which keeps it JVM-side as an Arrow-backed ``LocalRelation``: no scan sends
+the rows back through a Python worker, and the relation carries exact size
+statistics for the planner. Naive ``datetime`` values enter Arrow as UTC
+wall-clock, so Spark (session zone UTC) reads the same wall-clock the
+generator wrote, as the DuckDB replication in the golden test does,
+whatever the host's ``TZ``.
 """
 
 from __future__ import annotations
@@ -32,10 +31,9 @@ from __future__ import annotations
 import datetime as dt
 import random
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+
+from ..sources.readers import local_frame
 
 BASE = dt.datetime(2023, 1, 1)
 SPAN_DAYS = 30 * 30  # ~30 months
@@ -319,20 +317,6 @@ PREMIUM_COLS = (
 )
 
 
-def _arrow_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """One JVM-resident DataFrame from generated rows and their DDL.
-
-    Columns are taken by field index, so an empty ``rows`` still yields one
-    (empty) array per declared column and the frame keeps its schema.
-    """
-    schema = StructType.fromDDL(ddl)
-    arrow_schema = to_arrow_schema(schema)
-    columns = [
-        pa.array([r[i] for r in rows], type=field.type) for i, field in enumerate(arrow_schema)
-    ]
-    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
-
-
 def raw_rows(seed: int = 42, scale: float = 1.0) -> dict[str, tuple[list[tuple], str]]:
     """The generated rows and DDL of each raw entity (deterministic for a seed)."""
     rng = random.Random(seed)
@@ -348,5 +332,5 @@ def raw_rows(seed: int = 42, scale: float = 1.0) -> dict[str, tuple[list[tuple],
 def raw_tables(spark: SparkSession, seed: int = 42, scale: float = 1.0) -> dict[str, DataFrame]:
     """Build the four raw entity DataFrames (deterministic for a seed)."""
     return {
-        name: _arrow_frame(spark, rows, ddl) for name, (rows, ddl) in raw_rows(seed, scale).items()
+        name: local_frame(spark, rows, ddl) for name, (rows, ddl) in raw_rows(seed, scale).items()
     }

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import load
+from ..sources.readers import load, local_frame
 from . import dround, register
 from .r6_ops import _CENTS_SQL, _cents, _det3, _det4
 
@@ -1034,7 +1034,8 @@ def sink_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for codec in sorted(CODECS)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "codec string, n_rows long, content_ok boolean, "
         "size_positive boolean, smaller_than_uncompressed boolean",

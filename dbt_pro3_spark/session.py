@@ -74,6 +74,17 @@ def get_spark(app_name: str = "dbt-pro3-spark") -> SparkSession:
         # 1 MB pages (the floor of Spark's own sizing rule) remove those
         # bursts; a record larger than a page still gets a page of its size.
         .config("spark.buffer.pageSize", "1m")
+        # Whole-stage codegen cache, in compiled classes (a static conf read
+        # once per JVM). Spark's default of 100 is smaller than any working
+        # set here, and an LRU cache cycled over more entries than it holds
+        # misses on nearly every lookup: on a 4-core host each warm
+        # keys_iterative pass recompiled ~272 of its ~290 classes through
+        # Janino, and each warm dag_medallion op 57 of its ~240. One full
+        # 339-key bench.py pass at sf0.01 compiles ~5.3k distinct classes;
+        # 8000 holds that with headroom, and the warm passes of all three
+        # then compile (next to) nothing. Cost: ~8 KB of metaspace per
+        # cached class, ~40 MB once the bench.py set is resident.
+        .config("spark.sql.codegen.cache.maxEntries", "8000")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

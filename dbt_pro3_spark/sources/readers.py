@@ -6,12 +6,14 @@ Mirrors the reference's source surface (SURVEY.md §2.A):
                                    (models/bronze/claims_bronze.sql:41-42)
 - Auto Loader ``_rescued_data`` -> ``read_csv_rescued``
                                    (models/bronze/policies_bronze.sql:38)
+- driver-side rows (fixtures, small result frames) -> ``local_frame``
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import tune
 
@@ -104,6 +106,32 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             entry = (app, normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet")))
             _SCAN_CACHE[key] = entry
         return entry[1]
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """One JVM-resident DataFrame from driver-side rows and their DDL.
+
+    The rows go to Spark once as a ``pyarrow.Table`` built column by
+    column, which Spark keeps as a ``LocalRelation`` (an Arrow-backed RDD
+    above ``spark.sql.execution.arrow.localRelationThreshold``). A
+    Python-list ``createDataFrame`` is a Python-RDD scan instead, so every
+    action would send the rows back through Python workers. The relation
+    also carries exact size statistics for the planner. Columns are taken
+    by field index, so an empty ``rows`` still yields one (empty) array per
+    declared column and the frame keeps its schema. Naive ``datetime``
+    values enter Arrow as UTC wall-clock, which the UTC session zone reads
+    back unchanged whatever the host's ``TZ``.
+    """
+    # imported here so that importing the query modules does not load pyarrow
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in rows], type=field.type) for i, field in enumerate(arrow_schema)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
 
 
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:
