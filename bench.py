@@ -445,21 +445,17 @@ def main() -> None:
     for name in HEADLINE:
         run(name)
 
-    # The embedding probe trio is memoized per (app, sf_dir) inside
-    # _topk_scored's helpers with single-entry eviction — at most ONE live
-    # trio per session (the round-6 leak was 3 fresh broadcasts per call,
-    # 45+ live by bench end). It is deliberately KEPT warm across passes:
-    # like scan_partition_pruned's partitioned table, the probe matrix is
-    # index state built once per session, and clearing it at pass
-    # boundaries just re-charges the first consumer key ~2 s of rebuild
-    # that no steady-state session pays. The same protocol covers the
-    # other session indexes added in round 7 — the graph basket/adjacency
-    # frames (ext/graph.py:_GRAPH_CACHE), the PCA (gram, eigvec) pair
-    # (r4_ops._PCA_CACHE) and the IVF medoid/cell index
-    # (ext/ivf.py:_IVF_CACHE) — each memoized per (app, sf_dir) with the
-    # identical single-entry-eviction lifecycle and left warm across
-    # passes: a production graph/ANN deployment queries a materialized
-    # index, it does not rebuild the index per query.
+    # The session memo (dbt_pro3_spark/memo.py) is deliberately KEPT warm
+    # across passes. It holds the scan frames of load() and the index state
+    # the families share: the embedding probe trio (the round-6 leak was 3
+    # fresh broadcasts per call, 45+ live by bench end), the graph
+    # basket/adjacency frames, the PCA (gram, eigvec) pair and the IVF
+    # medoid/cell index. Each family keeps one sf_dir live per application.
+    # Like scan_partition_pruned's partitioned table, this is index state
+    # built once per session: clearing it at pass boundaries would re-charge
+    # the first consumer key its rebuild (~2 s for the probe trio), which no
+    # steady-state session pays. A production graph/ANN deployment queries a
+    # materialized index; it does not rebuild the index per query.
 
     # min of 2 timed runs per key on top of the warm pass: the host shows
     # intermittent external load (BASELINE.md machine note); a single

@@ -17,12 +17,11 @@ nprobe > 1 trades cost for recall by scanning several nearest cells.
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from .similarity import as_double, cosine, l2_norm, with_norm
 
 
@@ -96,62 +95,22 @@ def _assign_cells(df: DataFrame, centroids: list[list[float]], vec_col: str) -> 
 
 
 # ---------------------------------------------------------------------------
-# Shared IVF index — memoized per (applicationId, sf_dir)
+# Shared IVF index — family ``ivf`` of the session memo (memo.py)
 # ---------------------------------------------------------------------------
 # ext_ann_ivf, ext_ann_pq and ext_dedup_semantic all start from the SAME
 # md5-medoid seed set for a given corpus, and the first and last also from
 # the same cell-assigned corpus. An IVF index is built once and stored in
 # production (FAISS trains + assigns, then every query searches the stored
-# index), so the steady-state cost of a search starts AT the index. Same
-# single-entry lifecycle as the probe / graph / PCA caches: at most one
-# live (sf_dir, k) entry per application, miss evicts all.
-#
-# Assumptions (shared by the probe / graph / PCA caches): (1) the parquet
-# files under sf_dir are IMMUTABLE for the application's lifetime — the key
-# carries no data fingerprint, so an in-place rewrite would serve a stale
-# index; (2) calls come from a single driver thread (the bench/driver
-# shape) — _IVF_LOCK serializes the miss path so concurrent first calls
-# can't double-build and leak a persisted frame, but the coarse
-# build-under-lock is tuned for that single-threaded reality, not for
-# throughput under contention.
-_IVF_CACHE: dict = {}
-_IVF_LOCK = threading.RLock()
-
-
-def clear_ivf_cache() -> None:
-    """Unpersist cached cell-index frames and drop every cache entry."""
-    with _IVF_LOCK:
-        for cached in _IVF_CACHE.values():
-            cells = cached.get("cells")
-            if cells is not None:
-                try:
-                    cells.unpersist(blocking=False)
-                except Exception:
-                    pass  # session already stopped; nothing to free
-        _IVF_CACHE.clear()
-
-
-def _cache_slot(spark, sf_dir: str, k: int) -> dict:
-    # k is part of the key: a k=16 build must never answer a k=32 request
-    # with 16 seeds (latent until a second k appears, but silent then).
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    slot = _IVF_CACHE.get(key)
-    if slot is None:
-        clear_ivf_cache()
-        slot = {}
-        _IVF_CACHE[key] = slot
-    return slot
+# index), so the steady-state cost of a search starts AT the index. k is
+# part of the scope: a k=16 build must never answer a k=32 request with 16
+# seeds (latent until a second k appears, but silent then).
 
 
 def shared_medoid_seeds(spark, sf_dir: str, emb_fn, k: int = 16) -> list[list[float]]:
-    """medoid_seeds for sf_dir's embeddings, memoized per (applicationId,
-    sf_dir, k): one bounded k-row collect per session instead of per key.
+    """medoid_seeds for sf_dir's embeddings, memoized per (session, sf_dir,
+    k): one bounded k-row collect per session instead of per key.
     emb_fn() must return the embeddings frame; only called on a miss."""
-    with _IVF_LOCK:
-        slot = _cache_slot(spark, sf_dir, k)
-        if "seeds" not in slot:
-            slot["seeds"] = medoid_seeds(emb_fn(), k=k)
-        return slot["seeds"]
+    return session_memo(spark, "ivf", (sf_dir, k), "seeds", lambda: medoid_seeds(emb_fn(), k=k))
 
 
 def shared_cell_index(spark, sf_dir: str, emb_fn, k: int = 16):
@@ -161,18 +120,19 @@ def shared_cell_index(spark, sf_dir: str, emb_fn, k: int = 16):
     cells frame is stamped with the centroid set that assigned it
     (_ivf_centroids attribute) so topk_ivf can reject a mismatched
     (centroids, corpus_cells) pair."""
-    with _IVF_LOCK:
-        slot = _cache_slot(spark, sf_dir, k)
+
+    def build() -> DataFrame:
         cents = shared_medoid_seeds(spark, sf_dir, emb_fn, k=k)
-        if "cells" not in slot:
-            cells = (
-                _assign_cells(with_norm(emb_fn()), cents, "_v")
-                .select("vec_id", "_v", "_norm", "cell")
-                .persist()
-            )
-            cells._ivf_centroids = cents
-            slot["cells"] = cells
-        return cents, slot["cells"]
+        cells = (
+            _assign_cells(with_norm(emb_fn()), cents, "_v")
+            .select("vec_id", "_v", "_norm", "cell")
+            .persist()
+        )
+        cells._ivf_centroids = cents
+        return cells
+
+    cells = session_memo(spark, "ivf", (sf_dir, k), "cells", build)
+    return cells._ivf_centroids, cells
 
 
 def topk_ivf(

@@ -210,15 +210,6 @@ _PRIORITY_TAIL = [
 # order, followed by _PRIORITY_TAIL, followed by the rest.
 _CORE_MODULES_LAST_KEY = "audit_rowcount_log"
 
-# Re-sample targets: keys whose defect was fixed (or whose oracle was
-# upgraded) in the current round and must land a driver-green CORRECTNESS
-# row before anything else. After the r11 fold-in there are none: 22 keys
-# remain never driver-verified, and they already lead the window. Five of
-# them are the r11 misses (ext_text_encode_ids, ext_feature_hashing,
-# array_funcs_misc, ext_embed_whiten, ext_embed_quantile_norm), whose
-# array-output columns the driver's canonicalizer cannot sort.
-_R5_RESAMPLE: list[str] = []
-
 # Keys the driver's bounded CORRECTNESS window has already verified green —
 # the union of every round's CORRECTNESS_rNN greens to date (r01-r11, 492
 # keys), grouped below by the round that sampled them. The driver samples
@@ -232,7 +223,7 @@ _R5_RESAMPLE: list[str] = []
 # ext_dedup_fuzzy (rows-only by design: pyspark.ml MinHashLSH banding has
 # no SQL twin) got its best-possible driver check in r03 and rotates out
 # with the rest; the ANN triad re-entered the window in round 7 when it
-# gained real oracles (_R5_RESAMPLE).
+# gained real oracles.
 _DRIVER_VERIFIED = {
     # r11 window (CORRECTNESS_r11.json — 45/50 hash-green fold-in)
     "agg_boolean_funcs", "agg_histogram_equidepth", "date_parts_misc",
@@ -402,7 +393,7 @@ _DRIVER_VERIFIED = {
     "ext_dedup_ngram_jaccard", "ext_dedup_embedding",
     "ext_dedup_embedding_exact", "ext_dedup_clusters",
     # (ext_ann_lsh / ext_ann_ivf got only rows-only r03 records; they left
-    # this set in round 7 when they gained real oracles — see _R5_RESAMPLE)
+    # this set in round 7 when they gained real oracles)
     "ext_topk_cosine_pandas", "ext_text_langid",
     "ext_text_quality", "ext_text_token_count", "ext_text_fingerprint",
     "ext_text_edit_distance", "ext_text_edit_distance_blocked",
@@ -443,15 +434,13 @@ def _ordered_keys() -> list[str]:
     ordered = list(dict.fromkeys(head + tail + rest))
     # Stable partition: never-driver-sampled keys first (priority order
     # preserved), already-verified keys last. Within the fresh partition,
-    # the round-5 re-sample targets lead (keys whose defect was fixed this
-    # round and must land a driver-green row), then the r4/r5 statistical
-    # batch (zero driver rows so far), then the remaining fresh keys.
+    # the r4/r5 statistical batch (zero driver rows so far) leads, then the
+    # remaining fresh keys.
     fresh = [k for k in ordered if k not in _DRIVER_VERIFIED]
     done = [k for k in ordered if k in _DRIVER_VERIFIED]
-    resample = [k for k in _R5_RESAMPLE if k in fresh]
-    fresh_r4 = [k for k in fresh if k in _R4_KEYS and k not in resample]
-    fresh_rest = [k for k in fresh if k not in _R4_KEYS and k not in resample]
-    return resample + fresh_r4 + fresh_rest + done
+    fresh_r4 = [k for k in fresh if k in _R4_KEYS]
+    fresh_rest = [k for k in fresh if k not in _R4_KEYS]
+    return fresh_r4 + fresh_rest + done
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -584,8 +584,9 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from ..operators.scale import write_partitioned
+    from .core_scan import SCRATCH
 
-    base = "/root/repo/.scratch/orders_by_month_" + _os.path.basename(sf_dir.rstrip("/"))
+    base = _os.path.join(SCRATCH, "orders_by_month_" + _os.path.basename(sf_dir.rstrip("/")))
     if not _os.path.exists(f"{base}/_SUCCESS"):
         o = load(spark, sf_dir, "orders").withColumn(
             "o_month", F.date_format("o_orderdate", "yyyy-MM")

@@ -21,7 +21,8 @@ from ..sources.readers import load
 from ..sources.sinks import audit_row
 from . import dround, register
 
-SCRATCH = "/root/repo/.scratch"
+# staging root of the write keys: .scratch/ at the top of the checkout
+SCRATCH = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "..", ".scratch"))
 
 
 # ---------------------------------------------------------------- 2.A scans

@@ -32,7 +32,9 @@ import os as _os_mod
 import uuid as _uuid_mod
 
 _RUN_TOKEN = _uuid_mod.uuid4().hex[:8]
-_SCRATCH_ROOT = "/root/repo/.scratch"
+_SCRATCH_ROOT = _os_mod.path.abspath(
+    _os_mod.path.join(_os_mod.path.dirname(__file__), "..", "..", ".scratch")
+)
 _PRUNED = False
 
 
@@ -53,19 +55,6 @@ def _scratch(prefix: str, sf_dir: str) -> str:
                 p = _os_mod.path.join(_SCRATCH_ROOT, d)
                 if _os_mod.path.isdir(p) and _os_mod.path.getmtime(p) < cutoff:
                     _sh.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-        # bucketed-table dirs (join_bucketed_colocate) carry the same
-        # per-run token and would otherwise accumulate forever — sweep
-        # them on the same cutoff (catalog entries are per-session, only
-        # the directories persist).
-        try:
-            wh = "/root/repo/spark-warehouse"
-            for d in _os_mod.listdir(wh):
-                if d.startswith("bk_"):
-                    p = _os_mod.path.join(wh, d)
-                    if _os_mod.path.isdir(p) and _os_mod.path.getmtime(p) < cutoff:
-                        _sh.rmtree(p, ignore_errors=True)
         except OSError:
             pass
     path = (
@@ -1113,7 +1102,7 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.ivf import shared_cell_index, topk_ivf
 
     emb = load(spark, sf_dir, "embeddings")
-    # session-shared materialized IVF index (ext/ivf.py:_IVF_CACHE)
+    # session-shared materialized IVF index (memo family "ivf", ext/ivf.py)
     cents, cells = shared_cell_index(spark, sf_dir, lambda: load(spark, sf_dir, "embeddings"), k=16)
     queries = emb.filter(F.col("vec_id") < 10)
     return topk_ivf(
@@ -2217,7 +2206,7 @@ def ext_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.ivf import shared_cell_index
     from ..ext.similarity import cosine
 
-    # session-shared materialized IVF index (ext/ivf.py:_IVF_CACHE)
+    # session-shared materialized IVF index (memo family "ivf", ext/ivf.py)
     _, e = shared_cell_index(
         spark, sf_dir, lambda: load(spark, sf_dir, "embeddings"), k=16
     )
@@ -2271,14 +2260,28 @@ def join_bucketed_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
     disabled inside the key so the bucketed SMJ path is what actually
     runs; the aggregate after the join is the usual partial+final."""
     import shutil as _sh
+    import time as _time
+    from urllib.parse import urlparse
 
     from ..operators.scale import write_bucketed
 
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    # the table dirs carry the per-run token and would otherwise accumulate
+    # forever: sweep other runs' dirs idle for a day (catalog entries are
+    # per-session, only the directories persist)
+    cutoff = _time.time() - 86400
+    try:
+        for d in _os_mod.listdir(wh):
+            p = _os_mod.path.join(wh, d)
+            if d.startswith("bk_") and _os_mod.path.isdir(p) and _os_mod.path.getmtime(p) < cutoff:
+                _sh.rmtree(p, ignore_errors=True)
+    except OSError:
+        pass
     suffix = f"{_os_mod.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{_RUN_TOKEN}"
     t_orders, t_lineitem = f"bk_orders_{suffix}", f"bk_lineitem_{suffix}"
     for t in (t_orders, t_lineitem):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _sh.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
+        _sh.rmtree(_os_mod.path.join(wh, t), ignore_errors=True)
     write_bucketed(
         load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"),
         t_orders, "o_orderkey", num_buckets=8,

@@ -48,12 +48,12 @@ New named patterns this module demonstrates:
 from __future__ import annotations
 
 import math
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..ext import text as tx
+from ..memo import session_memo
 from ..sources.readers import load, spread
 from . import dround, register
 from .llm_ops import _TOKS_SQL, _md5_32, _spark_md5_32
@@ -155,52 +155,17 @@ def _quantize_mat(m: DataFrame, units: int) -> DataFrame:
     )
 
 
-# Memoized (gram, v) per (applicationId, sf_dir) — ext_embed_pca_power,
-# ext_embed_pca_project and ext_embed_isotropy all start from the IDENTICAL
-# Gram matrix and dominant eigenvector for a given corpus, and the Gram
-# aggregate is the one corpus-sized stage in each. Same single-entry
-# lifecycle as the embedding probe cache (r4d_ops._PROBE_CACHE) and the
-# graph index (ext/graph.py:_GRAPH_CACHE): a miss evicts every cached
-# entry before building, so a session holds at most one live pair (the
-# frames are d^2=4096 and d=64 rows — negligible storage).
-# Assumptions (shared with the probe / graph / IVF caches): sf_dir parquet
-# is immutable for the application's lifetime (no data fingerprint in the
-# key), and callers are a single driver thread (_PCA_LOCK serializes the
-# miss path so concurrent first calls can't double-build and orphan a
-# persisted frame).
-_PCA_CACHE: dict = {}
-_PCA_LOCK = threading.RLock()
-
-
-def clear_pca_cache() -> None:
-    """Unpersist and drop every cached (gram, v) pair."""
-    with _PCA_LOCK:
-        for cached in _PCA_CACHE.values():
-            for df in cached:
-                try:
-                    df.unpersist(blocking=False)
-                except Exception:
-                    pass  # session already stopped; nothing to free
-        _PCA_CACHE.clear()
-
-
 def _pca_eigvec(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(gram, v): the exact-integer Gram matrix (j, k, g) and the dominant
     eigenvector (dim, eigvec_unit) via quantized repeated squaring —
     shared by ext_embed_pca_power, ext_embed_pca_project and
-    ext_embed_isotropy, memoized per (applicationId, sf_dir)."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    with _PCA_LOCK:
-        hit = _PCA_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
-        clear_pca_cache()
-        return _pca_eigvec_build(spark, sf_dir, cache_key)
+    ext_embed_isotropy, memoized per (session, sf_dir) as family ``pca``
+    of the session memo (the Gram aggregate is the one corpus-sized stage
+    in each; the frames are d^2=4096 and d=64 rows)."""
+    return session_memo(spark, "pca", sf_dir, "gram_v", lambda: _pca_eigvec_build(spark, sf_dir))
 
 
-def _pca_eigvec_build(
-    spark: SparkSession, sf_dir: str, cache_key
-) -> tuple[DataFrame, DataFrame]:
+def _pca_eigvec_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     emb = load(spark, sf_dir, "embeddings")
     # Outer product WITHOUT a self-join: quantize the array once, then a
     # double posexplode streams the n x d^2 product rows straight into the
@@ -219,7 +184,7 @@ def _pca_eigvec_build(
     gram = (
         pairs.groupBy("j", "k")
         .agg(F.sum(F.col("xj") * F.col("xk")).cast("bigint").alias("g"))
-        .persist()  # feeds m0, the callers' reuse, and the session cache
+        .persist()  # feeds m0, the callers' reuse, and the session memo
     )
     # The squaring chain operates on d^2 = 4096-row frames: coalesce to ONE
     # partition so each of the PCA_SQUARINGS joins+aggregates is a single
@@ -247,8 +212,7 @@ def _pca_eigvec_build(
         .select(F.col("j").alias("dim"), F.col("g").alias("eigvec_unit"))
         .persist()
     )
-    _PCA_CACHE[cache_key] = (gram, v)
-    return _PCA_CACHE[cache_key]
+    return gram, v
 
 
 @register("ext_embed_pca_power", _pca_oracle())
@@ -521,7 +485,7 @@ def ext_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     never leaves the cluster."""
     from ..ext.graph import pairs_from_baskets, shared_baskets
 
-    # session-shared basket index (ext/graph.py:_GRAPH_CACHE); in-row
+    # session-shared basket index (memo family "graph", ext/graph.py); in-row
     # pair enumeration — one shuffle, no self-join; oracle keeps the
     # self-join twin
     bas = shared_baskets(
@@ -621,7 +585,7 @@ def ext_item_cooccur_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-item window over >= {COS_MIN_PAIR}-support pairs only."""
     from ..ext.graph import pairs_from_baskets, shared_baskets
 
-    # session-shared basket index (ext/graph.py:_GRAPH_CACHE); the
+    # session-shared basket index (memo family "graph", ext/graph.py); the
     # per-order part sets ARE distinct, so degrees explode straight off it
     bas = shared_baskets(
         spark,
@@ -1003,7 +967,7 @@ def ext_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate); the basket count is a 1-row broadcast."""
     from ..ext.graph import pairs_from_baskets, shared_baskets
 
-    # session-shared basket index (ext/graph.py:_GRAPH_CACHE); per-order
+    # session-shared basket index (memo family "graph", ext/graph.py); per-order
     # part sets are distinct, so degrees and the basket count read
     # straight off the persisted arrays — no separate distinct pass
     bas = shared_baskets(

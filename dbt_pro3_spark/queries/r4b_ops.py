@@ -2439,7 +2439,7 @@ def ext_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits, shuffle join beyond). No windows; output is one row."""
     from ..ext.graph import shared_adjacency
 
-    # session-shared persisted adjacency (ext/graph.py:_GRAPH_CACHE)
+    # session-shared persisted adjacency (memo family "graph", ext/graph.py)
     adj = shared_adjacency(
         spark,
         sf_dir,

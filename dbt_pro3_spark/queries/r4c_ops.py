@@ -1761,7 +1761,7 @@ def ext_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph ops in the reference; beyond-reference surface)."""
     from ..ext.graph import shared_adjacency
 
-    # session-shared persisted adjacency (ext/graph.py:_GRAPH_CACHE);
+    # session-shared persisted adjacency (memo family "graph", ext/graph.py);
     # the (u < v) edge list is a NARROW explode of the sorted neighbor
     # arrays — no basket shuffle, no pair distinct; oracle keeps the
     # self-join twin

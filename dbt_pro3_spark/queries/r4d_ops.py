@@ -33,11 +33,10 @@ analytics surface mandated by the build brief.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from ..sources.readers import load
 from . import dround, register
 
@@ -267,7 +266,7 @@ def ext_graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond-reference surface)."""
     from ..ext.graph import _PAIR_EXPR, shared_adjacency
 
-    # session-shared persisted adjacency (ext/graph.py:_GRAPH_CACHE)
+    # session-shared persisted adjacency (memo family "graph", ext/graph.py)
     adj = shared_adjacency(
         spark,
         sf_dir,
@@ -348,35 +347,20 @@ _SCORED_SQL = f"""e AS MATERIALIZED (
 PROBE_MAX = 65_536  # loud bound on the collected probe matrix (no silent cap)
 _NN_MARGIN = 4e-6  # raw-score slack covering 6dp rounding + both engines' ulps
 
-# Memoized probe-side broadcasts, keyed by (applicationId, sf_dir). All six
-# _topk_scored consumers (reciprocal_nn, knn_classify, mrr, ndcg, outlier_knn,
-# lof) probe the IDENTICAL (ids, matrix, norms) trio for a given corpus, so
-# re-broadcasting per call both wastes executor memory and — worse — leaks:
-# a long bench session (3 passes x ~6 consumers) accumulated 45+ live
-# embedding-matrix broadcasts, degrading sibling keys 2-4x. The cache keeps
-# AT MOST ONE live trio per Spark application: a lookup miss first unpersists
-# every cached entry (other sf_dirs, dead sessions) before broadcasting anew.
-# Assumptions (shared with the graph / PCA / IVF caches): sf_dir parquet is
-# immutable for the application's lifetime (the key carries no data
-# fingerprint), and callers are a single driver thread (_PROBE_LOCK
-# serializes the miss path so concurrent first calls can't double-build and
-# orphan a live broadcast trio).
-_PROBE_CACHE: dict = {}
-_PROBE_LOCK = threading.RLock()
+# Probe-side broadcasts, family ``probe`` of the session memo (memo.py).
+# All six _topk_scored consumers (reciprocal_nn, knn_classify, mrr, ndcg,
+# outlier_knn, lof) probe the IDENTICAL (ids, matrix, norms) trio for a given
+# corpus, so re-broadcasting per call both wastes executor memory and —
+# worse — leaks: a long bench session (3 passes x ~6 consumers) accumulated
+# 45+ live embedding-matrix broadcasts, degrading sibling keys 2-4x. The memo
+# keeps one corpus live per application and unpersists the old trio when the
+# corpus changes.
 
 
 def _probe_broadcasts(spark: SparkSession, sf_dir: str):
     """Return (b_ids, b_mat, b_norms) broadcasts for sf_dir's embeddings,
-    memoized per (applicationId, sf_dir) with single-entry eviction."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _PROBE_LOCK:
-        hit = _PROBE_CACHE.get(key)
-        if hit is not None:
-            return hit
-        clear_probe_cache()
-        trio = _probe_build(spark, sf_dir)
-        _PROBE_CACHE[key] = trio
-        return trio
+    memoized per (session, sf_dir)."""
+    return session_memo(spark, "probe", sf_dir, "trio", lambda: _probe_build(spark, sf_dir))
 
 
 def _probe_build(spark: SparkSession, sf_dir: str):
@@ -398,22 +382,6 @@ def _probe_build(spark: SparkSession, sf_dir: str):
         spark.sparkContext.broadcast(mat),
         spark.sparkContext.broadcast(norms),
     )
-
-
-def clear_probe_cache() -> None:
-    """Unpersist and drop every cached probe broadcast. _probe_broadcasts
-    calls this on every cache miss, so a session never holds more than one
-    live trio; long-lived sessions done with the embedding family can call
-    it directly to release the executor memory (bench.py deliberately does
-    NOT — the warm trio is session-index state, see its protocol note)."""
-    with _PROBE_LOCK:
-        for cached in _PROBE_CACHE.values():
-            for b in cached:
-                try:
-                    b.unpersist(blocking=False)
-                except Exception:
-                    pass  # session already stopped; nothing to free
-        _PROBE_CACHE.clear()
 
 
 def _topk_scored(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -835,7 +803,7 @@ def ext_graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond-reference surface)."""
     from ..ext.graph import shared_adjacency
 
-    # session-shared persisted adjacency (ext/graph.py:_GRAPH_CACHE)
+    # session-shared persisted adjacency (memo family "graph", ext/graph.py)
     adj = shared_adjacency(
         spark,
         sf_dir,
@@ -2534,7 +2502,7 @@ def ext_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/models (beyond-reference surface)."""
     from ..ext.graph import pairs_from_baskets, shared_baskets
 
-    # session-shared basket index (ext/graph.py:_GRAPH_CACHE)
+    # session-shared basket index (memo family "graph", ext/graph.py)
     bas = shared_baskets(
         spark,
         sf_dir,

@@ -839,7 +839,7 @@ def ext_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.ivf import shared_medoid_seeds
 
     emb = load(spark, sf_dir, "embeddings")
-    # session-shared medoid seed set (ext/ivf.py:_IVF_CACHE) — the same
+    # session-shared medoid seed set (memo family "ivf", ext/ivf.py) — the same
     # 16-row collect ext_ann_ivf / ext_dedup_semantic key their cells on
     seeds = shared_medoid_seeds(
         spark, sf_dir, lambda: load(spark, sf_dir, "embeddings"), k=16
@@ -3770,7 +3770,7 @@ def ext_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and lift divide identical exact integers in double on both engines."""
     from ..ext.graph import pairs_from_baskets, shared_baskets
 
-    # session-shared basket index (ext/graph.py:_GRAPH_CACHE); per-order
+    # session-shared basket index (memo family "graph", ext/graph.py); per-order
     # part sets are distinct, so n_orders and per-item counts read
     # straight off the persisted arrays
     bas = shared_baskets(

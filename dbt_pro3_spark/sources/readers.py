@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..memo import session_memo
 from ..session import tune
 
 TESTDATA_TABLES = [
@@ -67,45 +68,28 @@ def normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Memoized base-scan FRAMES, keyed by (session, sf_dir, table).
-# This caches scan-plan METADATA only (the DataFrame is an immutable
-# logical plan; reusing the object is identical to a caller reusing its
-# own variable): spark.read.parquet costs ~100 ms per call of pure
-# driver-side work (file index + footer schema inference) even for a
-# single local file, and the registry averages 2-3 load() calls per key
-# — measured ~15-20% of the whole 339-key bench before this cache.
-# Every action over the shared frame still reads and recomputes from the
-# parquet files; NO data or results are cached (guide §6 puts file-
-# listing caching in the same class). The key is the SparkSession object
-# itself, so a frame is only ever returned to the session it is bound to
-# (``spark.newSession()`` gets its own entry and runs under its own conf),
-# and a hit costs no py4j round trip. Assumptions shared with the other
-# session caches (graph/probe/IVF): sf_dir parquet is immutable for the
-# application's lifetime, and entries from other applications (recorded
-# with each entry) are purged on first miss so a restarted session never
-# sees stale JVM references.
-_SCAN_CACHE: dict = {}
-_SCAN_LOCK = __import__("threading").Lock()
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver-provided parquet table.
 
     Parquet scans give Catalyst predicate pushdown + column pruning for free;
     never cache DATA here — let each query prune its own columns. The
-    scan-plan object is memoized per session (see _SCAN_CACHE above).
+    scan-plan object is memoized per session (``memo``, family ``scan``):
+    ``spark.read.parquet`` costs ~100 ms per call of pure driver-side work
+    (file index + footer schema inference) even for one local file, and the
+    registry averages 2-3 ``load()`` calls per key — measured ~15-20% of the
+    whole 339-key bench before the memo. The frame is an immutable logical
+    plan, so reusing it is identical to a caller reusing its own variable:
+    every action still reads the parquet files, and no data or result is
+    cached.
     """
     tune(spark)
-    key = (spark, sf_dir, name)
-    with _SCAN_LOCK:
-        entry = _SCAN_CACHE.get(key)
-        if entry is None:
-            app = spark.sparkContext.applicationId
-            for k in [k for k, (a, _) in _SCAN_CACHE.items() if a != app]:
-                del _SCAN_CACHE[k]
-            entry = (app, normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet")))
-            _SCAN_CACHE[key] = entry
-        return entry[1]
+    return session_memo(
+        spark,
+        "scan",
+        sf_dir,
+        name,
+        lambda: normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet")),
+    )
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:

@@ -7,7 +7,8 @@ where dup_scans lists parquet relations scanned more than once in the
 physical plan (the union-over-shared-subtree recompute pathology), and
 python_nodes flags BatchEvalPython/ArrowEvalPython/MapInArrow/FlatMapGroupsInPandas.
 
-Uses the same cold-cache protocol as tests/test_shuffle_ceilings.py.
+Uses the same cold-memo protocol as tests/test_shuffle_ceilings.py
+(clear_session_memo before each key).
 Plans only — nothing is executed. Run at sf0.01 (default) for planning
 speed; Exchange/scan counts are partition-independent.
 """
@@ -27,6 +28,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
+    from dbt_pro3_spark.memo import clear_session_memo
     from dbt_pro3_spark.queries import all_queries
     from dbt_pro3_spark.session import get_spark
 
@@ -34,14 +36,12 @@ def main() -> None:
 
     keys = sys.argv[1:] or list(bench.HEADLINE)
 
-    from tests.test_shuffle_ceilings import clear_all_session_caches
-
     spark = get_spark("dbt-pro3-spark-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
     for key in keys:
-        clear_all_session_caches()
+        clear_session_memo()
         try:
             df = queries[key](spark, sf_dir)
             buf = io.StringIO()

@@ -1,10 +1,10 @@
 """Measure per-key Exchange-operator counts for the shuffle-ceiling pins.
 
-Runs tests/test_shuffle_ceilings.py's measurement protocol BY IMPORTING
-its pieces (clear_all_session_caches + tests.test_plan_quality.plan_str),
-not by copying them — so a pin update is always taken under the same
+Runs tests/test_shuffle_ceilings.py's measurement protocol with the same
+pieces (the package's clear_session_memo + tests.test_plan_quality.plan_str),
+not copies of them — so a pin update is always taken under the same
 cold, order-independent conditions the test enforces, even if the
-protocol evolves (a fifth session cache, a different explain mode).
+protocol evolves (a new memo family, a different explain mode).
 
 Usage:
     python scripts/measure_exchange_ceilings.py key1 key2 ...
@@ -30,6 +30,7 @@ SF_DIR = "/root/testdata/sf0.01"
 def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     os.environ.setdefault("SPARK_SHUFFLE_PARTITIONS", "8")
+    from dbt_pro3_spark.memo import clear_session_memo
     from dbt_pro3_spark.queries import all_queries
     from dbt_pro3_spark.session import get_spark
     from tests import test_shuffle_ceilings as tsc
@@ -60,7 +61,7 @@ def main() -> None:
     spark = get_spark("measure-exchange-ceilings")
     out = {}
     for k in keys:
-        tsc.clear_all_session_caches()
+        clear_session_memo()
         try:
             out[k] = plan_str(queries[k](spark, SF_DIR)).count(") Exchange")
         except Exception as e:  # measurement tool: report, keep going

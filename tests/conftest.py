@@ -31,3 +31,15 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     return con
+
+
+def memo_entries(family: str) -> dict:
+    """Live entries of one session-memo family: (session, scope, part) -> value."""
+    from dbt_pro3_spark import memo
+
+    return {(k[0], k[2], k[3]): v for k, (_, v) in memo._MEMO.items() if k[1] == family}
+
+
+def memo_scopes(family: str) -> set:
+    """The scopes one session-memo family holds live."""
+    return {scope for _, scope, _ in memo_entries(family)}

@@ -21,8 +21,8 @@ kinds of claims:
    keep-lowest-id rule fires on every row.
 
 The doubled corpus lives in a tmp dir, so this also exercises the
-session caches (_PCA_CACHE / _IVF_CACHE) across a second, non-testdata
-sf_dir with their single-entry eviction.
+session memo's ``pca`` and ``ivf`` families across a second, non-testdata
+sf_dir with their one-live-scope eviction.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ import os
 import duckdb
 import pytest
 
+from dbt_pro3_spark.memo import clear_session_memo
 from dbt_pro3_spark.queries import all_oracle, all_queries
 
 from .parity import compare
@@ -77,19 +78,19 @@ def duck2x(emb2x_dir):
 
 
 def test_eigvec_invariant_and_extensives_double(spark, emb2x_dir):
-    from dbt_pro3_spark.queries.r4_ops import _pca_eigvec, clear_pca_cache
+    from dbt_pro3_spark.queries.r4_ops import _pca_eigvec
 
-    clear_pca_cache()
+    clear_session_memo()
     gram1, v1 = _pca_eigvec(spark, SRC)
     g1 = {(r["j"], r["k"]): r["g"] for r in gram1.collect()}
     e1 = {r["dim"]: r["eigvec_unit"] for r in v1.collect()}
-    clear_pca_cache()  # force the doubled corpus to build fresh
+    clear_session_memo()  # force the doubled corpus to build fresh
     gram2, v2 = _pca_eigvec(spark, emb2x_dir)
     g2 = {(r["j"], r["k"]): r["g"] for r in gram2.collect()}
     e2 = {r["dim"]: r["eigvec_unit"] for r in v2.collect()}
     assert g2 == {k: 2 * v for k, v in g1.items()}, "Gram must double exactly"
     assert e2 == e1, "dominant eigenvector must be duplication-invariant"
-    clear_pca_cache()
+    clear_session_memo()
 
 
 def test_isotropy_shares_invariant_under_doubling(spark, emb2x_dir):
@@ -121,14 +122,10 @@ def test_ivf_index_build_linear_and_assignment_id_free(spark, emb2x_dir):
       ids or row order."""
     from pyspark.sql import functions as F
 
-    from dbt_pro3_spark.ext.ivf import (
-        _assign_cells,
-        clear_ivf_cache,
-        shared_cell_index,
-    )
+    from dbt_pro3_spark.ext.ivf import _assign_cells, shared_cell_index
     from dbt_pro3_spark.ext.similarity import with_norm
 
-    clear_ivf_cache()
+    clear_session_memo()
     cents, _ = shared_cell_index(
         spark, SRC, lambda: spark.read.parquet(f"{SRC}/embeddings.parquet"), k=16
     )
@@ -142,7 +139,7 @@ def test_ivf_index_build_linear_and_assignment_id_free(spark, emb2x_dir):
     )
     mism = orig.join(clone, "vec_id").filter(F.col("cell") != F.col("cell_clone"))
     assert mism.count() == 0, mism.limit(5).collect()
-    clear_ivf_cache()
+    clear_session_memo()
 
 
 def test_ivf_probe_finds_exact_clone(spark, emb2x_dir):
@@ -152,15 +149,10 @@ def test_ivf_probe_finds_exact_clone(spark, emb2x_dir):
     IVF probe that misses a same-cell exact duplicate is broken."""
     from pyspark.sql import functions as F
 
-    from dbt_pro3_spark.ext.ivf import (
-        _assign_cells,
-        clear_ivf_cache,
-        shared_cell_index,
-        topk_ivf,
-    )
+    from dbt_pro3_spark.ext.ivf import _assign_cells, shared_cell_index, topk_ivf
     from dbt_pro3_spark.ext.similarity import with_norm
 
-    clear_ivf_cache()
+    clear_session_memo()
     cents, _ = shared_cell_index(
         spark, SRC, lambda: spark.read.parquet(f"{SRC}/embeddings.parquet"), k=16
     )
@@ -178,7 +170,7 @@ def test_ivf_probe_finds_exact_clone(spark, emb2x_dir):
         clone_hits = [r for r in rows if r["vec_id"] == qid + ID_SHIFT]
         assert clone_hits, f"query {qid}: exact clone missing from top-5: {rows}"
         assert clone_hits[0]["cosine"] == 1.0
-    clear_ivf_cache()
+    clear_session_memo()
 
 
 def test_semantic_dedup_drops_every_clone(spark, emb2x_dir):

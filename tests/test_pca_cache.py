@@ -1,32 +1,35 @@
 """Lifecycle contract for the memoized PCA (gram, v) pair
-(r4_ops._PCA_CACHE) — shared by ext_embed_pca_power / _pca_project /
-_embed_isotropy, same single-entry-eviction rules as the probe cache."""
+(r4_ops._pca_eigvec, session-memo family ``pca``) — shared by
+ext_embed_pca_power / _pca_project / _embed_isotropy, one live corpus at a
+time like the probe broadcasts."""
 
 from __future__ import annotations
 
-from dbt_pro3_spark.queries.r4_ops import (
-    _PCA_CACHE,
-    _pca_eigvec,
-    clear_pca_cache,
-)
+from dbt_pro3_spark.memo import clear_session_memo
+from dbt_pro3_spark.queries.r4_ops import _pca_eigvec
+
+from .conftest import memo_entries, memo_scopes
 
 SF1 = "/root/testdata/sf0.001"
 SF2 = "/root/testdata/sf0.01"
 
 
 def test_pca_cache_memoizes_and_holds_one_entry(spark):
-    clear_pca_cache()
+    clear_session_memo()
     a = _pca_eigvec(spark, SF1)
-    assert len(_PCA_CACHE) == 1
+    assert len(memo_entries("pca")) == 1
     assert _pca_eigvec(spark, SF1) is a, "same sf_dir must hit cache"
     gram, v = a
     assert gram.storageLevel.useMemory and v.storageLevel.useMemory
     # a different sf_dir EVICTS the old pair — never two corpora live
     b = _pca_eigvec(spark, SF2)
-    assert len(_PCA_CACHE) == 1
+    assert len(memo_entries("pca")) == 1
+    assert memo_scopes("pca") == {SF2}
     assert b is not a
-    clear_pca_cache()
-    assert len(_PCA_CACHE) == 0
+    assert not gram.storageLevel.useMemory and not v.storageLevel.useMemory
+    clear_session_memo()
+    assert len(memo_entries("pca")) == 0
+    assert not any(df.storageLevel.useMemory for df in b), "clear must release storage"
 
 
 def test_pca_cached_values_are_corpus_correct(spark):
@@ -35,7 +38,7 @@ def test_pca_cached_values_are_corpus_correct(spark):
     stale or cross-corpus cache hit."""
     import numpy as np
 
-    clear_pca_cache()
+    clear_session_memo()
     gram, v = _pca_eigvec(spark, SF1)
     g = np.zeros((64, 64))
     for r in gram.collect():
@@ -47,4 +50,4 @@ def test_pca_cached_values_are_corpus_correct(spark):
         got[r["dim"]] = r["eigvec_unit"]
     cos = abs(got @ top) / (np.linalg.norm(got) * np.linalg.norm(top))
     assert cos > 0.999, cos
-    clear_pca_cache()
+    clear_session_memo()

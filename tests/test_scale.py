@@ -200,3 +200,34 @@ def test_ngram_jaccard_stop_shingle_cap_bounds_candidates(spark):
     assert len(got) <= df_counts
     # and the bound itself is tiny versus the uncapped binom(2000, 2)
     assert df_counts < 0.01 * (n_docs * (n_docs - 1) / 2)
+
+
+def test_bucketed_colocate_sweeps_the_session_warehouse(spark):
+    """join_bucketed_colocate stages its tables under the session's
+    spark.sql.warehouse.dir and sweeps other runs' day-old bk_ dirs there,
+    leaving younger ones alone."""
+    import os
+    import shutil
+    import time
+    from urllib.parse import urlparse
+
+    from dbt_pro3_spark.queries import all_queries
+    from dbt_pro3_spark.queries.extensions import _RUN_TOKEN
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    stale = os.path.join(wh, "bk_orders_sf0_01_stalerun")
+    live = os.path.join(wh, "bk_orders_sf0_01_liverun")
+    for d in (stale, live):
+        os.makedirs(d, exist_ok=True)
+    day_old = time.time() - 2 * 86400
+    os.utime(stale, (day_old, day_old))
+    try:
+        all_queries()["join_bucketed_colocate"](spark, SF_DIR)
+        assert not os.path.exists(stale)
+        assert os.path.isdir(live)
+        suffix = f"{os.path.basename(SF_DIR.rstrip('/')).replace('.', '_')}_{_RUN_TOKEN}"
+        for t in ("orders", "lineitem"):
+            assert os.path.isdir(os.path.join(wh, f"bk_{t}_{suffix}"))
+    finally:
+        shutil.rmtree(stale, ignore_errors=True)
+        shutil.rmtree(live, ignore_errors=True)

@@ -19,12 +19,12 @@ extra corpus-sized shuffle costs real wall-clock at 100 TB; the tail pins
 cost nothing to keep and catch regressions before a key climbs the
 ranks.
 Counts are warmth- and order-independent: the autouse fixture below
-clears every session cache BEFORE EACH KEY, so each key plans from a
+clears the session memo BEFORE EACH KEY, so each key plans from a
 deterministic cold state whether the module runs alphabetically, under
 pytest-xdist distribution, or via -k single-test selection (ADVICE r8:
 exact pins measured at one warmth are not reproducible under subset
 selection). Re-measure with the same per-key cold clearing when updating
-a pin (scripts pattern: clear all four caches, plan, count ") Exchange").
+a pin (scripts pattern: clear_session_memo(), plan, count ") Exchange").
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pathlib import Path
 
 import pytest
 
+from dbt_pro3_spark.memo import clear_session_memo
 from dbt_pro3_spark.queries import all_queries
 
 from .conftest import SF_DIR
@@ -51,23 +52,6 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def clear_all_session_caches():
-    """Clear every session-index cache (graph / IVF / PCA / probe) — THE
-    canonical cold-measurement step, imported by
-    scripts/measure_exchange_ceilings.py so the script and this module
-    can never measure under different conditions. A new session cache
-    must be added HERE (one place) to join the protocol."""
-    from dbt_pro3_spark.ext.graph import clear_graph_cache
-    from dbt_pro3_spark.ext.ivf import clear_ivf_cache
-    from dbt_pro3_spark.queries.r4_ops import clear_pca_cache
-    from dbt_pro3_spark.queries.r4d_ops import clear_probe_cache
-
-    clear_graph_cache()
-    clear_ivf_cache()
-    clear_pca_cache()
-    clear_probe_cache()
-
-
 @pytest.fixture(autouse=True)
 def _cold_session_caches(spark):
     """Plan shape for the session-index families depends on cache warmth
@@ -75,8 +59,10 @@ def _cold_session_caches(spark):
     exchanges vs a cold build), so clear every cache before EACH key: the
     pinned count is then a property of the key alone, not of which tests
     ran first — reproducible standalone, under -k selection, and under
-    pytest-xdist alike (ADVICE r8)."""
-    clear_all_session_caches()
+    pytest-xdist alike (ADVICE r8). scripts/measure_exchange_ceilings.py
+    runs the same clear before each key, so script and test never measure
+    under different conditions."""
+    clear_session_memo()
     yield
 
 

@@ -9,8 +9,11 @@ table column arrives as plain session-UTC TIMESTAMP — never TIMESTAMP_NTZ
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from dbt_pro3_spark.ext.graph import shared_adjacency
+from dbt_pro3_spark.memo import clear_session_memo
 from dbt_pro3_spark.sources.readers import TESTDATA_TABLES, load, normalize_ts
 
 from .conftest import SF_DIR, SF_SMALL
@@ -59,10 +62,15 @@ def test_timestamp_filter_pushdown_reaches_scan(spark):
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan
 
 
+def _li_fn(session):
+    return lambda: load(session, SF_SMALL, "lineitem").select("l_orderkey", "l_partkey")
+
+
 def test_scan_memo_is_keyed_by_session(spark):
-    """_SCAN_CACHE boundary: a second SparkSession in the same application
-    gets a frame bound to itself (so it runs under its own conf), and each
-    session still hits its own memo."""
+    """Session-memo boundary: a second SparkSession in the same application
+    gets frames bound to itself (so they run under its own conf), and each
+    session still hits its own memo. Checked for the scan family and for an
+    index family (graph adjacency)."""
     first = load(spark, SF_SMALL, "region")
     assert load(spark, SF_SMALL, "region") is first
 
@@ -72,3 +80,25 @@ def test_scan_memo_is_keyed_by_session(spark):
     assert df._jdf.sparkSession().equals(other._jsparkSession)
     assert load(other, SF_SMALL, "region") is df
     assert load(spark, SF_SMALL, "region") is first
+
+    adj = shared_adjacency(spark, SF_SMALL, _li_fn(spark))
+    other_adj = shared_adjacency(other, SF_SMALL, _li_fn(other))
+    assert other_adj.sparkSession is other
+    assert other_adj._jdf.sparkSession().equals(other._jsparkSession)
+    assert shared_adjacency(other, SF_SMALL, _li_fn(other)) is other_adj
+    assert shared_adjacency(spark, SF_SMALL, _li_fn(spark)) is adj
+    clear_session_memo()
+
+
+def test_memoized_scan_is_the_plain_normalized_scan(spark):
+    """The scan family memoizes metadata only: the frame is exactly
+    normalize_ts(spark.read.parquet(path)), nothing is persisted, and its
+    analyzed plan computes the same result as a fresh build."""
+    for name in ("lineitem", "events"):
+        df = load(spark, SF_SMALL, name)
+        fresh = normalize_ts(spark.read.parquet(f"{SF_SMALL}/{name}.parquet"))
+        assert not df.is_cached
+        assert df.storageLevel == StorageLevel.NONE
+        assert df.schema == fresh.schema
+        analyzed = df._jdf.queryExecution().analyzed()
+        assert analyzed.sameResult(fresh._jdf.queryExecution().analyzed())
