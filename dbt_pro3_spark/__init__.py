@@ -19,8 +19,9 @@ idiomatic Spark-first engine:
                   embedding-cosine), similarity search (brute force + LSH),
                   text analysis (lang-id, quality, tokens, fingerprints),
                   multimodal binary-column plumbing.
-- ``pipeline``  : the 12 reference models (bronze/silver/gold) re-expressed
-                  as DataFrame pipelines over synthetic insurance fixtures.
+- ``pipeline``  : the 12 reference models (bronze/silver/gold) over
+                  synthetic insurance fixtures: typed-cast bronze, and one
+                  SQL text per silver and gold model.
 - ``queries``   : the driver-facing registry: one runnable query per operator
                   key from SURVEY.md §2, each with a DuckDB oracle SQL twin.
 

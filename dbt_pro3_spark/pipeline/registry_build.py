@@ -22,7 +22,9 @@ from . import silver as sv
 DEFAULT_RUN_TS = "2025-06-30 12:00:00"
 
 
-def build_registry(raw: dict[str, DataFrame], run_ts: str = DEFAULT_RUN_TS) -> ModelRegistry:
+def build_registry(
+    raw: dict[str, DataFrame], run_ts: str | None = DEFAULT_RUN_TS
+) -> ModelRegistry:
     # The run DATE derived from run_ts is injected everywhere the reference
     # uses CURRENT_DATE (report_date, age, churned_flag) so a registry built
     # with a fixed run_ts is deterministic across calendar days — goldens

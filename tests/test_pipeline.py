@@ -603,31 +603,177 @@ def test_injected_run_date_no_wall_clock(spark):
     assert bad == 0
 
 
+def _wall_clock_offenders(src: str) -> list[str]:
+    """Lines of Python source that read the wall clock outside the one
+    guarded fallback. Matches the SQL tokens CURRENT_DATE, CURRENT_TIMESTAMP
+    and NOW() and the Python F.current_date()/current_timestamp(), in any
+    case; comments and docstrings (prose about the reference) are blanked
+    first. The only allowed form is the run-clock fallback on a NULL
+    injected parameter, ``CASE WHEN :run_ts IS NULL THEN CURRENT_TIMESTAMP()
+    ELSE CAST(:run_ts AS TIMESTAMP) END`` (and its :run_date twin)."""
+    import ast
+    import io
+    import re
+    import tokenize
+
+    lines = src.splitlines()
+    for node in ast.walk(ast.parse(src)):
+        body = getattr(node, "body", None)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef)) and body:
+            doc = body[0]
+            if isinstance(doc, ast.Expr) and isinstance(doc.value, ast.Constant) and isinstance(
+                doc.value.value, str
+            ):
+                for i in range(doc.lineno - 1, doc.end_lineno):
+                    lines[i] = ""
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            row, col = tok.start
+            lines[row - 1] = lines[row - 1][:col]
+    clock = re.compile(r"\bcurrent_(date|timestamp)\b|\bnow\s*\(", re.IGNORECASE)
+    guarded = re.compile(
+        r"CASE WHEN :(run_ts|run_date) IS NULL THEN CURRENT_(TIMESTAMP|DATE)\(\)"
+        r" ELSE CAST\(:\1 AS \2\) END"
+    )
+    return [
+        f"{i}: {line.strip()}"
+        for i, line in enumerate(lines, 1)
+        if clock.search(guarded.sub("", line))
+    ]
+
+
 def test_pipeline_source_has_no_wall_clock_dates():
-    """Structural lint: the pipeline modules may call F.current_date()/
-    current_timestamp() ONLY inside the documented run_date/run_ts fallbacks
+    """Structural lint: the pipeline modules may read CURRENT_DATE/
+    CURRENT_TIMESTAMP ONLY inside the documented run_date/run_ts fallback
     (the reference-semantics path when nothing is injected). Any new
     unconditional wall-clock column would re-arm the date bomb."""
     import pathlib
 
-    import re
-
     root = pathlib.Path(__file__).resolve().parents[1] / "dbt_pro3_spark" / "pipeline"
-    # allowed ONLY as the guarded ternary fallback on an injected value —
-    # the pattern used by _rdate/age/created_at. A bare substring check on
-    # 'if'/'else' would whitelist comments and identifiers; require the
-    # actual fallback form.
-    guarded = re.compile(
-        r"(?:if\s+\w+\s+is\s+None\s+)?else\s+F\.current_(date|timestamp)\(\)"
-        r"|F\.current_(date|timestamp)\(\)\s+if\s+\w+\s+is\s+None\s+else"
-    )
-    offenders = []
-    for p in sorted(root.glob("*.py")):
-        for i, line in enumerate(p.read_text().splitlines(), 1):
-            if "current_date()" in line or "current_timestamp()" in line:
-                if not guarded.search(line):
-                    offenders.append(f"{p.name}:{i}: {line.strip()}")
+    offenders = [
+        f"{p.name}:{hit}"
+        for p in sorted(root.glob("*.py"))
+        for hit in _wall_clock_offenders(p.read_text())
+    ]
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize(
+    "line,flagged",
+    [
+        ('X = "SELECT CURRENT_DATE() AS d FROM t"', True),
+        ('X = "SELECT current_date AS d FROM t"', True),
+        ('X = "SELECT Now() AS t"', True),
+        ("x = F.current_timestamp()", True),
+        # the guarded fallback, but on a parameter other than the run clock
+        ('X = "CASE WHEN :d IS NULL THEN CURRENT_DATE() ELSE CAST(:d AS DATE) END"', True),
+        ('X = "CASE WHEN :run_date IS NULL THEN CURRENT_DATE() ELSE CAST(:run_date AS DATE) END"',
+         False),
+        ("# the reference's CURRENT_DATE", False),
+        ('def f():\n    """YEAR(CURRENT_DATE) in the reference."""', False),
+    ],
+)
+def test_wall_clock_lint_flags_unguarded_reads(line, flagged):
+    assert bool(_wall_clock_offenders(line + "\n")) is flagged
+
+
+def test_run_ts_none_falls_back_to_live_clock(spark):
+    """``build_registry(raw, run_ts=None)`` is the reference semantics: the
+    run clock is the live CURRENT_TIMESTAMP/CURRENT_DATE, never NULL."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    def today():
+        return datetime.datetime.now(datetime.timezone.utc).date()  # session TZ is UTC
+
+    clock_cols = {
+        "customers_silver": ["processed_at"],
+        "policies_silver": ["processed_at"],
+        "claims_silver": ["processed_at"],
+        "gold_customer_360": ["processed_at", "report_date"],
+        "gold_policy_performance": ["report_date"],
+        "gold_claims_operations": ["report_date"],
+        "gold_executive_summary": ["created_at", "report_date"],
+    }
+    before = today()
+    result = build_registry(fx.raw_tables(spark, seed=7, scale=0.05), run_ts=None).run(spark)
+    assert not result.test_failures
+    report_dates = {}
+    for name, cols in clock_cols.items():
+        df = result.outputs[name]
+        r = df.select(F.count(F.lit(1)).alias("n"), *[F.count(c).alias(c) for c in cols]).first()
+        assert r["n"] > 0 and all(r[c] == r["n"] for c in cols), (name, r)
+        if "report_date" in cols:
+            report_dates[name] = {row[0] for row in df.select("report_date").distinct().collect()}
+    after = today()
+    for name, got in report_dates.items():
+        assert got <= {before, after}, (name, got, before, after)
+
+
+def test_output_schemas_match_snapshot(pipeline_run):
+    """Names, types (decimal precision included) and nullability of all 12
+    outputs, pinned from the seed-42 DEFAULT_RUN_TS run. The summary
+    checksums skip double columns, so a double turning DECIMAL shows only
+    here."""
+    import json
+    import pathlib
+
+    _, result = pipeline_run
+    want = json.loads((pathlib.Path(__file__).parent / "medallion_schemas_seed42.json").read_text())
+    got = {name: json.loads(df.schema.json())["fields"] for name, df in result.outputs.items()}
+    assert sorted(got) == sorted(want)
+    for name in want:
+        assert got[name] == want[name], name
+
+
+def _pyspark_views(spark) -> list[str]:
+    return [t.name for t in spark.catalog.listTables() if t.name.startswith("_pyspark_")]
+
+
+def test_model_sql_leaves_no_temp_views(spark, pipeline_run):
+    """Each model's ``{ref}`` arguments become ``_pyspark_<uuid>`` temp views
+    for one spark.sql call: none may outlive it — not after a 4-thread DAG
+    run, a model whose text names a missing column, or a text whose
+    placeholder has no ref (which PySpark itself would leak)."""
+    from pyspark.errors import AnalysisException
+
+    from dbt_pro3_spark.pipeline import silver
+    from dbt_pro3_spark.pipeline.modelsql import run_sql
+
+    _, result = pipeline_run
+    assert _pyspark_views(spark) == []
+
+    bronze = result.outputs["customers_bronze"]
+    with pytest.raises(AnalysisException):
+        silver.customers_silver(bronze.drop("email"), DEFAULT_RUN_TS, RUN_DATE)
+    assert _pyspark_views(spark) == []
+
+    with pytest.raises(ValueError, match="placeholders"):
+        run_sql("SELECT * FROM {a} JOIN {b} USING (customer_id)", {}, a=bronze)
+    assert _pyspark_views(spark) == []
+
+
+def test_registry_calls_model_functions_by_module_attribute(monkeypatch):
+    """The tracer contract: perfbench's LayerTracer times each model by
+    replacing ``pipeline.<layer>.<model>``, so every registered model must be
+    a function of that name defined in that module, and the registry must
+    look it up through the module attribute at call time. A rename would
+    quietly zero the per-layer trace."""
+    import importlib
+
+    raw = {name: object() for name in fx.raw_rows(scale=0)}
+    reg = build_registry(raw)
+    assert len(reg._models) == 12
+    calls = []
+    for name, model in reg._models.items():
+        mod = importlib.import_module(f"dbt_pro3_spark.pipeline.{model.layer}")
+        fn = getattr(mod, name)
+        assert fn.__name__ == name and fn.__module__ == mod.__name__, name
+        monkeypatch.setattr(mod, name, lambda *a, _n=name, **k: calls.append(_n))
+    for model in reg._models.values():
+        model.fn(None, lambda dep: object())
+    assert calls == list(reg._models)
 
 
 def test_raw_tables_are_jvm_resident(spark):
